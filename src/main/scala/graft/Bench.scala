@@ -206,7 +206,7 @@ object Bench {
     * during micro setup and killed the whole run. A failed family now
     * logs, emits nothing, and the artifact still ships. */
   private def microBench(spark: SparkSession, sfDir: String,
-      only: Option[Set[String]] = None): Seq[(String, Double)] = {
+      only: Option[Set[String]]): Seq[(String, Double)] = {
     def family(label: String)(body: => Seq[(String, Double)]): Seq[(String, Double)] = {
       // ONLY filter (micro families go by label); budget check at the
       // family boundary — a family past the budget is SKIPPED BY NAME
@@ -635,10 +635,10 @@ object Bench {
     // each run rebuilds the clustered layout, the last stays for the
     // read micros
     val builds = scala.collection.mutable.ArrayBuffer
-      .empty[graft.sql.IndexedFrame.CompositeHandle[Long, Long]]
+      .empty[graft.sql.IndexedFrame.CompositeNHandle]
     val tRewrite = timed3("micro_zorder_rewrite_once") {
       builds.lastOption.foreach(_.idx.unpersist())
-      val h = hHash.zOrdered().analyzeZones("user_id", "day")
+      val h = hHash.zOrderedN(Seq("user_id", "day")).analyzeZones("user_id", "day")
       h.idx.cached; h.idx.count()
       builds += h
       ()
@@ -1243,7 +1243,6 @@ object Bench {
   /** SQL range pushdown: BETWEEN on a range-partitioned handle prunes
     * partitions; the hash-layout ordered handle visits all of them. */
   private def microSqlRange(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import spark.implicits._
     implicit val sp: SparkSession = spark
     val custDF = spark.read.parquet(s"$sfDir/customer.parquet")
     val hRp = graft.sql.IndexedFrame.indexRangePartitioned(custDF, "c_custkey", 32)
@@ -1558,7 +1557,7 @@ object Bench {
     def cutoff(i: Int) = java.sql.Timestamp.valueOf(
       f"2024-01-${5 + i % 20}%02d 12:00:00")
     val tAsOfIdx = timed3("micro_sql_asof_idx_50")((0 until 50).foreach { i =>
-      h.asOf((i % 25 + 1).toLong, cutoff(i)).collect()
+      h.asOf(Seq((i % 25 + 1).toLong), cutoff(i)).collect()
     })
     val tAsOfScan = timed3("micro_sql_asof_scan_50")((0 until 50).foreach { i =>
       cg.filter(col("user_id") === (i % 25 + 1).toLong &&
@@ -1599,7 +1598,7 @@ object Bench {
       org.apache.spark.sql.functions.expr(
         "timestamp_micros((1704153600 + id * 9137) * 1000000)").as("pt"))
     val tBatchIdx = timed3("micro_sql_asof_batch_idx_5")((0 until 5).foreach { _ =>
-      hB.asOfJoinFrame(asOfProbe(), "pu", "pt").collect()
+      hB.asOfJoinFrame(asOfProbe(), Seq("pu"), "pt").collect()
     })
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pu"), col("pt")).orderBy(col("ts").desc)

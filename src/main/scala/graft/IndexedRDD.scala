@@ -1576,11 +1576,11 @@ object IndexedRDD {
       val swapped: Boolean) extends org.apache.spark.Partitioner {
     override def numPartitions: Int = bounds.length + 1
     private[graft] def zOf(key: Any): Long = key match {
-      case (a: Long, b: Long) =>
+      case Seq(a: Long, b: Long) =>
         if (swapped) graft.operators.ZOrder.interleave(b, a, bits)
         else graft.operators.ZOrder.interleave(a, b, bits)
       case other => throw new IllegalArgumentException(
-        s"MortonPartitioner routes (Long, Long) composite keys, got " +
+        s"MortonPartitioner routes two-Long composite keys, got " +
           s"${if (other == null) "null" else other.getClass.getName}")
     }
     override def getPartition(key: Any): Int = {
@@ -1622,9 +1622,8 @@ object IndexedRDD {
     * values, at most 255 — 256 buckets/dim at 8 bits); `ords(d)`
     * orders that component (the key codec's ordering — serializable);
     * `perm(d)` is the KEY-COMPONENT index z-dimension `d` reads
-    * (ZORDER BY may name the key columns in any order). Accepts
-    * Seq[Any] keys (N-ary composite) and (a, b) tuples (the two-column
-    * composite with non-Long components). */
+    * (ZORDER BY may name the key columns in any order). Routes the
+    * composite handle's Seq[Any] keys. */
   class RankZPartitioner(val edges: Array[Array[Any]],
       val ords: Array[Ordering[Any]], val perm: Array[Int],
       val bounds: Array[Long])
@@ -1651,9 +1650,8 @@ object IndexedRDD {
         case s: Seq[_] =>
           require(s.length == n, s"key arity ${s.length} != $n dims")
           comp(s.toIndexedSeq)
-        case (a, b) if n == 2 => comp(IndexedSeq(a, b))
         case other => throw new IllegalArgumentException(
-          s"RankZPartitioner routes Seq[Any] / Tuple2 composite keys, " +
+          s"RankZPartitioner routes Seq[Any] composite keys, " +
             s"got ${if (other == null) "null" else other.getClass.getName}")
       }
       // 8 bits per dimension (<= 255 edges); dim 0 takes the HIGH

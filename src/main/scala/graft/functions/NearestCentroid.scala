@@ -80,7 +80,6 @@ object NearestCentroid {
 
   def compute(arr: ArrayData, centroids: Array[Array[Double]], cc: Array[Double],
       isFloat: Boolean): Long = {
-    val n = arr.numElements()
     var best = 0
     var bestD = Double.MaxValue
     var c = 0

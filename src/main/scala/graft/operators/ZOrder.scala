@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /**
  * Z-order (Morton) curve utilities for multi-dimensional data skipping

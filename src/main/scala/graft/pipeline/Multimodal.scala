@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -268,8 +268,6 @@ object Multimodal {
     * `Dedup.exactGroups` for opaque media columns. Shuffles only
     * (fingerprint, id) pairs, never payloads. */
   def dedupByContent(media: Dataset[MediaItem]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
     contentFingerprints(media).toDF()
       .groupBy(col("fp"))
       .agg(min(col("media_id")).as("keep_media_id"),

@@ -119,8 +119,6 @@ object Similarity {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
       query: Array[Double], k: Int, nlist: Int = 16, nprobe: Int = 4,
       sampleSize: Int = 512, iters: Int = 5): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // --- train coarse quantizer on a deterministic sample (vector
     // column cast to array<double> up front so float AND double
     // embedding columns collect the same way)

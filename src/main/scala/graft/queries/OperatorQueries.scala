@@ -187,7 +187,6 @@ object OperatorQueries {
 
     "ir_range" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       val idx = IndexedRDD.ordered(Tables.customer(s, dir)
         .select($"c_custkey", $"c_acctbal").as[(Long, Double)].rdd)
       s.createDataset(idx.range(100L, 300L))
@@ -196,7 +195,6 @@ object OperatorQueries {
 
     "ir_range_partitioned" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // globally range-partitioned layout: the range() call prunes to
       // only the partitions whose key interval overlaps [500, 800) —
       // O(range) tasks at scale instead of O(partitions)
@@ -208,7 +206,6 @@ object OperatorQueries {
 
     "ir_save_load" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // index persistence sink/source: save the built index, reload it
       // with its partitioner (no shuffle, no rebuild), then serve a
       // filtered scan from the reloaded copy. Fixed per-process path,
@@ -345,8 +342,8 @@ object OperatorQueries {
     "ir_sql_pointget_composite" -> { (s, dir) =>
       import s.implicits._
       implicit val sp: SparkSession = s
-      // COMPOSITE (two-column) SQL handle over the Tuple2 serializer
-      // (reference KeySerializer.scala:145-176 as first-class SQL
+      // COMPOSITE (two-column) SQL handle over the concatenated tuple
+      // serializer (reference KeySerializer.scala:145-176 as first-class SQL
       // keys): pushed conjunctive equality/IN on both columns routes
       // into the partition-pruned tuple multiget — 3 probes here, no
       // scan
@@ -413,7 +410,7 @@ object OperatorQueries {
         .union(s.range(1, 6)
           .select(lit(77L).as("sb"), ($"id" + 20000000L).as("sk"),
             ($"id" % 5).cast("double").as("delta")))
-      val merged = h.mergeFrame(src, "sb", "sk",
+      val merged = h.mergeFrame(src, Seq("sb", "sk"),
         deleteWhen = Some(col("s.delta") === 0.0),
         updateSet = Map("c_acctbal" -> (col("t.c_acctbal") + col("s.delta"))),
         insertValues = Map(
@@ -560,7 +557,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_table" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // PERSISTENT graft table: CREATE TABLE ... USING graft persists
       // the built index (one-file-per-partition + sidecars), SQL-text
       // DML commits change-set deltas to the table's on-disk log, and
@@ -596,8 +592,6 @@ object OperatorQueries {
     },
 
     "ir_sql_catalog_timetravel" -> { (s, dir) =>
-      import s.implicits._
-      implicit val sp: SparkSession = s
       // VERSION AS OF over the table's on-disk delta log, read from a
       // REOPENED session (no in-session chain exists there): version 1
       // is the state after the UPDATE and before the DELETE
@@ -620,8 +614,6 @@ object OperatorQueries {
     },
 
     "ir_sql_restore_sqltext" -> { (s, dir) =>
-      import s.implicits._
-      implicit val sp: SparkSession = s
       // RESTORE TABLE ... TO VERSION AS OF — Delta's rollback verb on
       // the durable log: the restore commits the INVERSE DIFF as a new
       // delta version (history intact), so a REOPENED session replaying
@@ -646,7 +638,6 @@ object OperatorQueries {
     },
 
     "ir_sql_restore_view" -> { (s, dir) =>
-      import s.implicits._
       implicit val sp: SparkSession = s
       // RESTORE on an in-session indexed VIEW: a pure pointer swap —
       // the chain pins the target snapshot's index, so rolling back
@@ -667,8 +658,6 @@ object OperatorQueries {
     },
 
     "ir_sql_catalog_index_ddl" -> { (s, dir) =>
-      import s.implicits._
-      implicit val sp: SparkSession = s
       // SQL index DDL on a PERSISTENT table: CREATE INDEX persists the
       // inverted-index sidecars (and the durable name manifest) beside
       // the base save, so a REOPENED session routes the secondary
@@ -690,7 +679,6 @@ object OperatorQueries {
     },
 
     "ir_sql_catalog_concurrent" -> { (s, dir) =>
-      implicit val sp: SparkSession = s
       // TWO WRITERS, ONE LOG: two sessions commit DML against the same
       // graft table CONCURRENTLY. The optimistic claim (atomic
       // create-if-absent of the next delta version — Delta's log
@@ -754,7 +742,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_evolve" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // SCHEMA EVOLUTION on the durable log: ALTER TABLE ADD COLUMNS
       // commits a schema delta (nothing rewrites — existing rows read
       // NULL through one narrow widening layer), later DML writes the
@@ -954,7 +941,6 @@ object OperatorQueries {
     },
 
     "ir_sql_vacuum_hours" -> { (s, dir) =>
-      implicit val sp: SparkSession = s
       // TIME-BASED retention (Delta's `RETAIN n HOURS`) on the durable
       // log: three DML versions, then RETAIN 0 HOURS folds everything
       // older than "now" — the current version alone survives, under
@@ -1095,7 +1081,7 @@ object OperatorQueries {
       // -> count(*) answered from key runs (values never read), plus
       // count(DISTINCT leading) = boundary-adjusted run counts and
       // count(*)/min/max(leading) from index structure — all claimed
-      // by IndexedAgg on the N-ary handle exactly like the 2-ary one
+      // by IndexedAgg on the N-ary handle exactly as at arity 2
       graft.sql.IndexedAgg.enable(s)
       val df = Tables.customer(s, dir)
         .withColumn("b1", ($"c_custkey" % 10).cast("long"))
@@ -1464,7 +1450,7 @@ object OperatorQueries {
         .agg(round(max($"value"), 2).as("mv"))
       val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
         g, "user_id", "ts", 16)
-      h.asOf(5L, java.sql.Timestamp.valueOf("2024-01-20 00:00:00"))
+      h.asOf(Seq(5L), java.sql.Timestamp.valueOf("2024-01-20 00:00:00"))
         .select($"user_id", unix_millis($"ts").as("ts_ms"), $"mv")
     },
 
@@ -1475,7 +1461,7 @@ object OperatorQueries {
       // key, asOf(Seq(tenant, user), T) reads that entity's latest
       // version at-or-before T — one bounded floor descent over the
       // N-ary tuple byte space plus a point probe; the multi-tenant
-      // SCD lookup the 2-column asOf could not express
+      // SCD lookup at arity 3
       val g = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
         .withColumn("tenant", ($"user_id" % 5).cast("long"))
@@ -1804,7 +1790,6 @@ object OperatorQueries {
 
     "ir_tuple2_multiget" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // composite (o_custkey, o_orderdate) key through the Tuple2
       // serializer end-to-end: index build, partition-pruned multiget,
       // same-day duplicates folded at build (updatable z/f; max is
@@ -1916,7 +1901,6 @@ object OperatorQueries {
     },
 
     "ir_sql_count" -> { (s, dir) =>
-      import s.implicits._
       implicit val sp: SparkSession = s
       // SQL count(*) over an indexed handle plans as the O(partitions)
       // index-size sum (IndexedAgg strategy) — no row scan, no
@@ -2182,7 +2166,6 @@ object OperatorQueries {
 
     "ir_stream_table_feed" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // STREAMING READ of the durable log (the outbound twin of
       // ir_stream_catalog): readStream.format("graft") tails the
       // table's delta versions as a change feed — upsert rows straight
@@ -2217,7 +2200,6 @@ object OperatorQueries {
 
     "ir_stream_table_feed_limit" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // RATE-LIMITED catch-up: a consumer attaching behind a
       // long-lived table bounds how many versions one micro-batch
       // advances (maxVersionsPerTrigger) instead of swallowing the
@@ -2263,7 +2245,6 @@ object OperatorQueries {
 
     "ir_stream_table_feed_ts" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // TIMESTAMP-ADDRESSED catch-up: startingTimestamp resolves
       // against the persisted per-version commit stamps (the same
       // floor rule as TIMESTAMP AS OF) and the feed emits exactly the
@@ -2312,7 +2293,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_zorder" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // OPTIMIZE ... ZORDER BY on a durable table: the base rewrite
       // re-clusters the (user_id, day) composite key along the Morton
       // curve and analyzes zone maps on BOTH key columns, so the 2-D
@@ -2353,7 +2333,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_zorder3" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // OPTIMIZE ... ZORDER BY over a THREE-column composite key — the
       // rank-space generalization (RankZPartitioner): each component
       // maps to its equal-depth bucket rank, the ranks interleave, and
@@ -2397,7 +2376,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_zorder_values" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // OPTIMIZE ... ZORDER BY on VALUE columns of a SINGLE-KEY table:
       // the primary cannot re-cluster by non-key columns (partition
       // assignment must stay a pure key function), so the rewrite
@@ -2445,7 +2423,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_zorder_values3" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // the N-dim value form: ZORDER BY three VALUE columns builds the
       // sort projection at 3 bits/dim (512 cells, rank-space Morton of
       // three equal-depth bucket ranks). A box constraining all three
@@ -2492,7 +2469,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_indexes" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // index observability: graft_indexes('t') lists (name, kind,
       // columns) — from the durable index-name manifest for catalog
       // tables, so a REOPENED session (which is what probes here) sees
@@ -2515,7 +2491,6 @@ object OperatorQueries {
 
     "ir_sql_manifest_stale" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // the GENERATE MANIFEST staleness CONTRACT: the mirror records
       // its source version, so graft_manifest_stale answers "is this
       // mirror current" with ZERO data reads — DML leaves a
@@ -2556,7 +2531,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_evolve2" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // PHASE-2 SCHEMA EVOLUTION end-to-end: rename a column, widen
       // int->bigint, drop a column — each a metadata-only schema delta
       // with a field mapping — interleaved with DML that only the
@@ -2599,7 +2573,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_automerge" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // WRITE-TIME AUTO-EVOLUTION (Delta's mergeSchema): an append
       // whose source carries a NEW column auto-commits an additive
       // ADD COLUMNS schema delta before the write — gated behind the
@@ -2638,7 +2611,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_txn" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // ATOMIC MULTI-TABLE TRANSACTIONS end-to-end: two micro-batches
       // each write a corpus table AND a stats table through ONE
       // coordinator-marked commit (transactBatch), with a restart
@@ -2687,7 +2659,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_fold" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // TIERED DELTA FOLDING end-to-end: 12 DML statements at the
       // default fold cadence (10) leave committed `_tfold_` sidecars
       // on disk, and a REOPENED session's replay covers the log with
@@ -2729,7 +2700,6 @@ object OperatorQueries {
 
     "ir_sql_catalog_reskew" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // POST-BUILD RE-SKEW end-to-end: every key is a multiple of 8,
       // so the 8-bucket hash build piles the corpus into partition 0;
       // appends regrow it far past the persisted maxpart cap, and
@@ -2766,7 +2736,6 @@ object OperatorQueries {
 
     "ir_sql_describe_detail" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // DESCRIBE DETAIL (Delta's one-row metadata verb): the
       // deterministic columns — key columns, live row count, version
       // window, sidecar inventory — oracle against the fixture; the
@@ -2788,7 +2757,6 @@ object OperatorQueries {
     },
 
     "ir_sql_catalog_clone" -> { (s, dir) =>
-      implicit val sp: SparkSession = s
       // CLONE: version 1 of the source (UPDATE applied, DELETE not)
       // materializes as an INDEPENDENT table with its own log; DML on
       // the clone never touches the source (required in-lane), and the
@@ -2825,7 +2793,6 @@ object OperatorQueries {
     },
 
     "ir_sql_catalog_constraint" -> { (s, dir) =>
-      implicit val sp: SparkSession = s
       // CHECK CONSTRAINTS on the durable table: ADD validates the
       // corpus, every later statement gates its upsert rows at delta
       // cost and a violating statement aborts BEFORE committing (the
@@ -2858,7 +2825,6 @@ object OperatorQueries {
 
     "ir_stream_catalog" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       // STREAMING INTO THE DURABLE CATALOG: foreachBatch commits each
       // micro-batch as ONE delta version of a graft table
       // (GraftCatalogSink) — the same log SQL DML writes, so the
@@ -3191,7 +3157,6 @@ object OperatorQueries {
     },
 
     "ir_sql_expr_group" -> { (s, dir) =>
-      import s.implicits._
       implicit val sp: SparkSession = s
       // GROUP BY f(key) for an arbitrary deterministic key expression
       // (here a modulo histogram): bucket counts off the key stream,
@@ -3204,7 +3169,6 @@ object OperatorQueries {
     },
 
     "ir_sql_percentile_key" -> { (s, dir) =>
-      import s.implicits._
       implicit val sp: SparkSession = s
       // EXACT median/percentile OF THE KEY by rank selection on the
       // range-partitioned layout: one O(partitions) sizes job locates
@@ -3339,7 +3303,7 @@ object OperatorQueries {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, Long)], _: Long) =>
           val p = batch.toDF("pu0", "ptm")
             .select($"pu0".as("pu"), expr("timestamp_micros(ptm)").as("pt"))
-          val res = h.asOfJoinFrame(p, "pu", "pt")
+          val res = h.asOfJoinFrame(p, Seq("pu"), "pt")
           acc.synchronized { acc ++= res.collect() }
           ()
         }.start()
@@ -3353,7 +3317,7 @@ object OperatorQueries {
       } finally q.stop()
       val schema = h.asOfJoinFrame(
         s.range(0).select(lit(1L).as("pu"),
-          expr("timestamp_micros(0)").as("pt")), "pu", "pt").schema
+          expr("timestamp_micros(0)").as("pt")), Seq("pu"), "pt").schema
       s.createDataFrame(
         new java.util.ArrayList(scala.jdk.CollectionConverters
           .BufferHasAsJava(acc).asJava), schema)
@@ -3371,7 +3335,7 @@ object OperatorQueries {
         versions, "user_id", "ts", 16)
       val p = s.range(0, 200).select(($"id" % 40 + 1).as("pu"),
         expr("timestamp_micros((1704153600 + id * 9137) * 1000000)").as("pt"))
-      h.asOfJoinFrame(p, "pu", "pt", keepMisses = true)
+      h.asOfJoinFrame(p, Seq("pu"), "pt", keepMisses = true)
     },
 
     "ir_sql_asof_lookup" -> { (s, dir) =>
@@ -3391,7 +3355,7 @@ object OperatorQueries {
         versions, "user_id", "ts", 16)
       val p = s.range(0, 200).select(($"id" % 25 + 1).as("pu"),
         expr("timestamp_micros((1704153600 + id * 9137) * 1000000)").as("pt"))
-      h.asOfJoinFrame(p, "pu", "pt")
+      h.asOfJoinFrame(p, Seq("pu"), "pt")
     },
 
     "ir_sql_range_lookup_join" -> { (s, dir) =>
@@ -3476,7 +3440,6 @@ object OperatorQueries {
     },
 
     "ir_sql_percentile_secondary" -> { (s, dir) =>
-      import s.implicits._
       implicit val sp: SparkSession = s
       // EXACT percentile of a NON-key column from its ordered
       // inverted index: the (value, posting-length) pairs ARE the

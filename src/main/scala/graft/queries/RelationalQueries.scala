@@ -309,7 +309,6 @@ object RelationalQueries {
     // unpruned lane above times the no-layout fallback.
     "q_zorder_box_pruned" -> { (s, dir) =>
       import s.implicits._
-      implicit val sp: SparkSession = s
       val agg = Tables.events(s, dir)
         .select($"user_id", unix_date(to_date($"ts")).cast("long").as("day"), $"value")
         .groupBy($"user_id", $"day")

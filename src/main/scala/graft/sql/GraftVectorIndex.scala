@@ -251,7 +251,7 @@ private[sql] object GraftVectorIndex {
     * `migrate`, rewrite in the current format (best-effort; rivals
     * racing the rewrite all write identical bytes atomically). */
   private def readMetaAt(sp: SparkSession, idxDir: String,
-      migrate: Boolean = false): Option[IvfMeta] = {
+      migrate: Boolean): Option[IvfMeta] = {
     val (fs, _) = fsOf(sp, idxDir)
     val f = new Path(idxDir, "_meta")
     def open() = new java.io.ObjectInputStream(fs.open(f))

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference,
   AttributeSet, BindReferences, EqualTo, Expression, GenericInternalRow,
-  GreaterThan, GreaterThanOrEqual, IsNotNull, JoinedRow, LessThan,
-  LessThanOrEqual, UnsafeProjection}
+  GreaterThan, GreaterThanOrEqual, IsNotNull, JoinedRow,
+  KnownFloatingPointNormalized, LessThan, LessThanOrEqual, UnsafeProjection}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter,
   LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical
@@ -17,7 +18,6 @@ import org.apache.spark.sql.execution.{FilterExec, LeafExecNode, ProjectExec, Sp
   SparkStrategy}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-import graft.IndexedRDD
 
 /**
  * SQL-visible INDEXED JOIN: a planner strategy that routes an inner
@@ -67,9 +67,7 @@ object IndexedJoin {
       case lr: LogicalRelation => lr.relation match {
         case rel: IndexedFrame.IndexedRelation[_] =>
           Some((lr.output, lr.output, Nil, rel.h))
-        case rel: IndexedFrame.CompositeRelation[_, _] =>
-          Some((lr.output, lr.output, Nil, rel.h))
-        case rel: IndexedFrame.CompositeNRelation =>
+        case rel: IndexedFrame.CompositeRelation =>
           Some((lr.output, lr.output, Nil, rel.h))
         case _ => None
       }
@@ -88,6 +86,24 @@ object IndexedJoin {
           (out, all, conds ++ conjuncts(cond), h)
         }
       case _ => None
+    }
+
+    /** `a = b` on two attributes, seen through the optimizer's
+      * floating-point key normalization: a double key column already
+      * stores that normal form (one zero, one NaN), so the index's key
+      * equality IS the normalized one. */
+    private object AttrEq {
+      private def attr(e: Expression): Option[AttributeReference] = e match {
+        case a: AttributeReference => Some(a)
+        case KnownFloatingPointNormalized(NormalizeNaNAndZero(a: AttributeReference)) =>
+          Some(a)
+        case _ => None
+      }
+      def unapply(e: Expression): Option[(AttributeReference, AttributeReference)] =
+        e match {
+          case EqualTo(l, r) => attr(l).zip(attr(r))
+          case _ => None
+        }
     }
 
     private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -133,15 +149,14 @@ object IndexedJoin {
                   (lKeys(i).contains(b.exprId) && rKeys(i).contains(a.exprId))
               }
             val (keyEqs, residual) = conjuncts(j.condition.get).partition {
-              case EqualTo(a: AttributeReference, b: AttributeReference) =>
-                pairIndex(a, b).isDefined
+              case AttrEq(a, b) => pairIndex(a, b).isDefined
               case _ => false
             }
             // the zip equates WHOLE keys: every component pair must be
             // covered by some conjunct, else this is a prefix join the
             // zip cannot serve
             val covered = keyEqs.flatMap {
-              case EqualTo(a: AttributeReference, b: AttributeReference) => pairIndex(a, b)
+              case AttrEq(a, b) => pairIndex(a, b)
               case _ => None
             }.toSet
             val allCovered = covered == lKeys.indices.toSet

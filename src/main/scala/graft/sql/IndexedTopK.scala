@@ -52,8 +52,7 @@ object IndexedTopK {
             Seq[org.apache.spark.sql.catalyst.expressions.Expression])] = p match {
       case lr: LogicalRelation => lr.relation match {
         case rel: IndexedFrame.IndexedRelation[_] => Some((rel.h, Nil))
-        case rel: IndexedFrame.CompositeRelation[_, _] => Some((rel.h, Nil))
-        case rel: IndexedFrame.CompositeNRelation => Some((rel.h, Nil))
+        case rel: IndexedFrame.CompositeRelation => Some((rel.h, Nil))
         case _ => None
       }
       case Project(projs, child) if projs.forall(_.isInstanceOf[Attribute]) =>

@@ -6,7 +6,7 @@ import graft.SparkSessionFixture
 
 /**
  * `OPTIMIZE t ZORDER BY (a, b)` on durable catalog tables
- * ([[GraftTables.compact]] + [[IndexedFrame.CompositeHandle.zOrdered]]):
+ * ([[GraftTables.compact]] + [[IndexedFrame.CompositeNHandle.zOrderedN]]):
  * the rewritten base is re-clustered along the Morton curve of the
  * two-column composite key, zone maps on BOTH key columns analyze and
  * persist, and a 2-D box query then prunes partitions through the zone

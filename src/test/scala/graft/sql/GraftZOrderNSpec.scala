@@ -57,7 +57,7 @@ class GraftZOrderNSpec extends AnyFunSuite {
     val expSum = grid.filter(r => r._1 <= 3 && r._2 <= 3 && r._3 <= 1 &&
       !(r._1 == 3 && r._2 == 3 && r._3 == 1)).map(_._4).sum - 1.0
     assert(boxSum === expSum)
-    val (kind, kept) = GraftBenchBridge.compositeNScanInfo(spark, path)
+    val (kind, kept) = GraftBenchBridge.compositeScanInfo(spark, path)
     assert(kind === "full_zone", kind)
     assert(kept >= 1 && kept <= 4, s"box kept $kept of 8 partitions")
     // point routing through the rank-z partitioner stays exact
@@ -77,7 +77,7 @@ class GraftZOrderNSpec extends AnyFunSuite {
         |AND d BETWEEN 0 AND 3 AND w BETWEEN 0 AND 1""".stripMargin)
       .collect()(0).getDouble(0)
     assert(reSum === expSum) // (0,0,0) carried v=0.0 — sum unchanged
-    val (kind2, kept2) = GraftBenchBridge.compositeNScanInfo(s2, path)
+    val (kind2, kept2) = GraftBenchBridge.compositeScanInfo(s2, path)
     assert(kind2 === "full_zone", kind2)
     assert(kept2 >= 1 && kept2 <= 4,
       s"reopened box kept $kept2 of 8 partitions")

@@ -99,7 +99,7 @@ class IndexedFrameModelSpec extends AnyFunSuite {
     val prop = Prop.forAll(probeGen) { ps =>
       val probe = ps.zipWithIndex.map { case ((u, t), i) => (u, t, i.toLong) }
         .toDF("pu", "pt", "tag")
-      val got = handle.asOfJoinFrame(probe, "pu", "pt")
+      val got = handle.asOfJoinFrame(probe, Seq("pu"), "pt")
         .select($"tag", $"vt", $"vv").as[(Long, Long, Long)]
         .collect().sorted.toSeq
       val model = ps.zipWithIndex.flatMap { case ((u, t), i) =>

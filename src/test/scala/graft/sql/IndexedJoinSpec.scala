@@ -630,7 +630,7 @@ class IndexedJoinSpec extends AnyFunSuite {
       (1L, 100L, 1), (1L, 105L, 2), (2L, 5L, 3), (3L, 9999L, 4),
       (999L, 50L, 5), (1L, 105L, 6), (null, 50L, 7), (4L, 10L, 8)))
       .toDF("pu", "pt", "tag")
-    val got = h.asOfJoinFrame(probe, "pu", "pt")
+    val got = h.asOfJoinFrame(probe, Seq("pu"), "pt")
     assert(got.columns.toSeq === Seq("pu", "pt", "tag", "vu", "vts", "value"))
     val w = Window.partitionBy($"tag").orderBy($"vts".desc)
     val expect = probe.join(versions, $"pu" === $"vu" && $"vts" <= $"pt")
@@ -641,7 +641,7 @@ class IndexedJoinSpec extends AnyFunSuite {
     // probes with no floor (before-first, unknown entity, null) drop
     assert(got.count() === 5)
     // keepMisses = LEFT-OUTER: every probe kept, versions null-extend
-    val outer = h.asOfJoinFrame(probe, "pu", "pt", keepMisses = true)
+    val outer = h.asOfJoinFrame(probe, Seq("pu"), "pt", keepMisses = true)
     assert(outer.count() === 8)
     val wE = Window.partitionBy($"tag").orderBy($"vts".desc_nulls_last)
     val expectOuter = probe.join(versions, $"pu" === $"vu" && $"vts" <= $"pt", "left")
